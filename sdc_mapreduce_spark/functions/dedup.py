@@ -9,11 +9,11 @@ Scale design (the point of each implementation):
   equi-join → pair-count), not an all-pairs cross join; cost tracks shingle
   co-occurrence, which is what makes exact verification feasible after
   blocking.
-- **MinHash-LSH**: per-doc signature of K min-hashes computed in ONE
-  aggregation over exploded shingles (K parallel ``min`` aggregates, all
-  JVM-side); banding turns near-dup search into an equi-join on
+- **MinHash-LSH**: per-doc K min-hashes of one universal-hash family,
+  computed map-side in an Arrow kernel that emits the band hashes
+  directly; banding turns near-dup search into one grouped aggregation on
   (band, band-hash) buckets. The only pairs ever materialized are bucket
-  collisions. This is the 100 TB path: shuffle volume = docs x signature,
+  collisions. This is the 100 TB path: shuffle volume = docs x bands,
   candidates ≪ n².
 - **SimHash**: signature via per-bit majority vote over the token multiset
   (a narrow Horner fold, no shuffle); near-dups = small Hamming distance,
@@ -33,6 +33,7 @@ these operators compose.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -212,16 +213,20 @@ def shingle_sets(
     the tuple directly (one n-ary xxhash64 per position: no string
     allocation, no join, no second hashing pass, distinct over longs)
     identifies exactly the same shingle universe, up to 64-bit hash
-    collisions, which the old string-hash representation was equally
-    subject to. The whole-text branch (< n tokens) cannot alias an n-gram
-    either way: both are whitespace-joins of token tuples of different
-    arity. Every consumer is a function of hash-set equality only
-    (Jaccard/containment intersections and sizes, MinHash signature bases,
-    prefix-filter df ranks), and every oracle replays STRING shingles in
-    DuckDB, so declared outputs are unchanged; MinHash signature VALUES
-    change (a different base family with the same collision statistics) —
-    banding recall is re-verified against the exhaustive-Jaccard oracles
-    at every fixture SF and the replica corpora."""
+    collisions. Those collisions are new for the exact-Jaccard verifies of
+    minhash_lsh_pairs and incremental_minhash_dedup, which used to
+    intersect the raw STRING arrays; the chance is ~|A|·|B|/2^64 for
+    documents A and B, and every oracle still replays STRING shingles. The whole-text
+    branch (< n tokens) hashes one joined string while the n-gram branch
+    hashes a token tuple, so the two branches stay apart only by the same
+    64-bit collision odds. Every consumer is a function of hash-set
+    equality only (Jaccard/containment intersections and sizes, MinHash
+    bases, prefix-filter df ranks), so declared outputs are unchanged
+    (verified bit-identical to brute force on the test corpora); MinHash
+    signature VALUES change (a different base family with the same
+    collision statistics) — banding recall is re-verified against the
+    exhaustive-Jaccard oracles at every fixture SF and the replica
+    corpora."""
     # Materialize the token array in its own projection first: higher-order
     # lambdas are interpreted (not codegen'd), so referencing the split()
     # expression inside the gram lambda would re-tokenize the document for
@@ -325,103 +330,27 @@ def jaccard_pairs(
     ).filter(F.col("jaccard") >= threshold)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 64,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash signatures: K = num_hashes values of ``min(xxhash64(seed_i ||
-    shingle))`` per document, computed as ``array_min(transform(shingles,
-    ...))`` over the per-doc shingle array — a narrow map-side projection
-    with ZERO shuffle (the explode + 64-way-min-aggregate formulation costs
-    a docs x shingles shuffle that this avoids entirely; at 100 TB the
-    signature stage is then pure scan throughput)."""
-    sets = shingle_sets(df, n=n, text_col=text_col, id_col=id_col)
-    return _signatures_from_sets(sets, num_hashes=num_hashes, id_col=id_col).drop(
-        "shingles"
-    )
+# The MinHash universal-hash family: h -> (a_i * h + b_i) mod (2^61 - 1)
+# over each shingle's 64-bit base hash, in uint64 wraparound arithmetic.
+_MERSENNE = (1 << 61) - 1
 
 
-def _signatures_from_sets(
-    sets: DataFrame, num_hashes: int = 64, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, shingles) → (id, shingles, mh_0..mh_{K-1}), map-side only.
-
-    Each shingle IS an 8-byte base hash (shingle_sets, r14); the K seeded
-    hashes derive from it via xxhash64(seed, base) — fixed-width rehashing
-    is ~an order of magnitude cheaper than re-hashing a string K times, and
-    the family is still pairwise-independent enough for MinHash collision
-    estimates."""
-    based = sets.select(
-        id_col,
-        "shingles",
-        F.col("shingles").alias("__base"),
-    )
-
-    # NOTE: the lambda must take exactly ONE argument — a two-arg lambda is
-    # interpreted by F.transform as the (element, index) form, which would
-    # silently bind the seed to the array index instead.
-    def seeded_min(i: int):
-        return F.array_min(
-            F.transform("__base", lambda h: F.xxhash64(F.lit(i), h))
-        ).alias(f"mh_{i}")
-
-    return based.select(
-        id_col, "shingles", *[seeded_min(i) for i in range(num_hashes)]
-    )
+def _minhash_coefficients(
+    rng: np.random.RandomState, num_hashes: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The (a, b) coefficients of ``num_hashes`` family members, drawn from
+    ``rng`` (a stays >= 1)."""
+    a = rng.randint(1, _MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
+    b = rng.randint(0, _MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
+    return a, b
 
 
-def _signatures_from_sets_arrow(
-    sets: DataFrame, num_hashes: int = 64, id_col: str = "doc_id"
-) -> DataFrame:
-    """Arrow/numpy twin of ``_signatures_from_sets``: the per-shingle base
-    hash stays JVM-side (one xxhash64 pass), the K seeded minima are
-    computed as a vectorized universal-hash family
-    ``min((a_i * h + b_i) mod 2^61-1)`` per document in numpy.
-
-    The JVM path evaluates K x |shingles| interpreted higher-order-function
-    expressions per document (transform/array_min are not codegen'd); this
-    path does the same work as one numpy outer product per Arrow batch —
-    wall-clock is several times lower at bench scale. Signature VALUES
-    differ from the JVM family (different hash family, same collision
-    statistics), so pick one path per pipeline."""
-    import numpy as np
-    import pandas as pd
-
-    MERSENNE = (1 << 61) - 1
-    rng = np.random.RandomState(RNG_SEED_MINHASH)
-    a = rng.randint(1, MERSENNE, size=num_hashes, dtype=np.int64)
-    b = rng.randint(0, MERSENNE, size=num_hashes, dtype=np.int64)
-
-    based = sets.select(
-        id_col,
-        "shingles",
-        F.col("shingles").alias("__base"),
-    )
-    out_schema = ", ".join(
-        [f"{id_col} long", "shingles array<long>"]
-        + [f"mh_{i} long" for i in range(num_hashes)]
-    )
-
-    def kernel(batches):
-        au = a.astype(np.uint64)
-        bu = b.astype(np.uint64)
-        for pdf in batches:
-            sig_rows = np.empty((len(pdf), num_hashes), dtype=np.int64)
-            for r, hs in enumerate(pdf["__base"]):
-                h = np.asarray(hs, dtype=np.int64).astype(np.uint64)
-                # (a*h + b) mod M in uint64 wraparound then fold to 61 bits;
-                # uniform enough for MinHash collision estimates
-                mixed = (au[:, None] * h[None, :] + bu[:, None]) % MERSENNE
-                sig_rows[r] = mixed.min(axis=1).astype(np.int64)
-            out = {id_col: pdf[id_col], "shingles": pdf["shingles"]}
-            for i in range(num_hashes):
-                out[f"mh_{i}"] = sig_rows[:, i]
-            yield pd.DataFrame(out)
-
-    return based.mapInPandas(kernel, schema=out_schema)
+def _minhash_minima(shingles, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """One document's K MinHash minima (uint64) over its shingle hashes;
+    the fraction of equal minima between two documents estimates their
+    Jaccard."""
+    h = np.asarray(shingles, dtype=np.int64).astype(np.uint64)
+    return ((a[:, None] * h[None, :] + b[:, None]) % _MERSENNE).min(axis=1)
 
 
 def _band_rows_arrow(
@@ -434,18 +363,15 @@ def _band_rows_arrow(
     costs a large whole-stage-codegen compile and K columns of Arrow
     transfer, while banding only ever needs the per-band mix. Output is
     bands rows per doc — the exact join-key shape LSH needs."""
-    import numpy as np
     import pandas as pd
 
-    MERSENNE = (1 << 61) - 1
     rows_per_band = num_hashes // bands
     rng = np.random.RandomState(RNG_SEED_MINHASH)
-    a = rng.randint(1, MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
-    b = rng.randint(0, MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
+    a, b = _minhash_coefficients(rng, num_hashes)
     # one odd multiplier per row-in-band for the band mix (any fixed mix
     # works — banding only needs equality to be signature-equality)
     mix = (
-        rng.randint(1, MERSENNE, size=rows_per_band, dtype=np.int64).astype(np.uint64)
+        rng.randint(1, _MERSENNE, size=rows_per_band, dtype=np.int64).astype(np.uint64)
         | np.uint64(1)
     )
 
@@ -468,9 +394,7 @@ def _band_rows_arrow(
             ids = np.repeat(pdf[id_col].to_numpy(), bands)
             bhash = np.empty((n, bands), dtype=np.int64)
             for r, hs in enumerate(pdf["__base"]):
-                h = np.asarray(hs, dtype=np.int64).astype(np.uint64)
-                mins = ((a[:, None] * h[None, :] + b[:, None]) % MERSENNE).min(axis=1)
-                per_band = mins.reshape(bands, rows_per_band)
+                per_band = _minhash_minima(hs, a, b).reshape(bands, rows_per_band)
                 bhash[r] = (per_band * mix[None, :]).sum(axis=1).astype(np.int64)
             yield pd.DataFrame(
                 {
@@ -491,17 +415,16 @@ def minhash_lsh_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    signature_impl: str = "arrow",
     max_bucket: int | None = 1000,
     broadcast_max_candidates: int = 10_000_000,
 ) -> DataFrame:
     """MinHash + LSH banding near-dup candidates, verified with exact
-    Jaccard. ``signature_impl``: 'arrow' (vectorized numpy minima — the
-    fast path) or 'jvm' (pure higher-order functions, zero Python).
+    Jaccard. The K minima and the band hashes come from one Arrow kernel
+    (:func:`_band_rows_arrow`).
 
     With K=64, b=16 bands of r=4 rows the collision curve
     P(candidate) = 1-(1-j^r)^b puts ~0.99+ recall at j ≥ 0.8. Candidates
-    come from an equi-join on (band_index, band_hash); exact Jaccard then
+    come from grouping on (band_index, band_hash); exact Jaccard then
     filters false positives, computed only on candidates (array_intersect on
     the two shingle sets). Returns (id_a, id_b, jaccard).
 
@@ -518,7 +441,6 @@ def minhash_lsh_pairs(
     ``broadcast_max_candidates`` the verify joins fall back to plain
     shuffle joins instead of an unbounded driver broadcast.
     """
-    rows_per_band = num_hashes // bands
     # The shingle arrays feed three consumers (banding, and both sides of
     # the verify join); persist so the tokenize+gram pass runs once. At
     # scale this is the materialized "shingle table" stage of a dedup
@@ -529,33 +451,11 @@ def minhash_lsh_pairs(
         shingle_sets(df, n=n, text_col=text_col, id_col=id_col),
         StorageLevel.MEMORY_AND_DISK,
     )
-    if signature_impl == "arrow":
-        # minima AND band mixing fused in one Arrow kernel — no K-column
-        # signature frame, no wide codegen
-        band_rows = _band_rows_arrow(
-            sets, num_hashes=num_hashes, bands=bands, id_col=id_col
-        ).withColumnRenamed(id_col, "__id")
-    else:
-        sigs = _signatures_from_sets(sets, num_hashes=num_hashes, id_col=id_col)
-        band_rows = sigs.select(
-            F.col(id_col).alias("__id"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(bi).alias("band"),
-                            F.xxhash64(
-                                *[
-                                    F.col(f"mh_{bi * rows_per_band + r}")
-                                    for r in range(rows_per_band)
-                                ]
-                            ).alias("bhash"),
-                        )
-                        for bi in range(bands)
-                    ]
-                )
-            ).alias("b"),
-        ).select("__id", "b.band", "b.bhash")
+    # minima AND band mixing fused in one Arrow kernel — no K-column
+    # signature frame, no wide codegen
+    band_rows = _band_rows_arrow(
+        sets, num_hashes=num_hashes, bands=bands, id_col=id_col
+    ).withColumnRenamed(id_col, "__id")
     # Candidate generation as ONE grouped aggregation (r14, guide §2.4):
     # the r12-r13 shape self-joined the band rows on (band, bhash) — the
     # same 16M-row frame (at the 100x corpus) shuffled and SMJ-sorted TWICE
@@ -1241,7 +1141,6 @@ def jaccard_prefix_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    pin_prefix: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via AllPairs/PPJoin prefix filtering —
     a LOSSLESS alternative to the full inverted-index self-join of
@@ -1297,6 +1196,15 @@ def jaccard_prefix_pairs(
     the exact verify is unchanged, so results are bit-identical; the
     filter only shrinks the pair set whose token arrays get shipped and
     intersected (the dominant verify-stage cost at the 100x corpus).
+
+    Memory shape: candidate generation groups the prefix rows by token, so
+    each prefix token's whole posting list — one (id, size, rank) struct
+    per document carrying that token in its prefix — is ONE uncapped
+    ``collect_list`` buffer in a single task. A degenerate corpus (N
+    near-identical documents sharing a rare prefix token) builds an O(N)
+    array there. Losslessness forbids dropping members the way
+    ``minhash_lsh_pairs(max_bucket=...)`` does, so the buffer is unbounded
+    by design today.
     """
     from pyspark import StorageLevel
     from pyspark.sql import Window
@@ -1321,19 +1229,13 @@ def jaccard_prefix_pairs(
         F.lit(1),
         F.col("__sz") - F.ceil(F.col("__sz") * threshold - eps) + 1,
     )
-    # pin_prefix: under the r13 self-join shape the prefix frame was
-    # consumed twice and the pin won its committed A/B
-    # (CHECKS_r13/pin_ab_10x.md). The r14 grouped candidate generation
-    # below reads the frame ONCE, so the pin now only costs storage —
-    # default flipped to False; the toggle stays for A/B evidence.
+    # Read once by the grouped candidate generation below, so not pinned.
     prefix = (
         inv.join(dfreq, "__h")
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= prefix_len)
         .select("__id", "__sz", "__h", "__rn")
     )
-    if pin_prefix:
-        prefix = pin(prefix, StorageLevel.MEMORY_AND_DISK)
     # Candidate generation as ONE grouped pass (r14, guide §2.4 — the
     # minhash_lsh_pairs bucket shape): the r13 form self-joined the prefix
     # frame on __h, which at the 100x corpus meant a 384 MiB broadcast

@@ -195,9 +195,9 @@ class JobQueue:
             job = self._jobs[job_id]
             was = job.status
             if was == CREATED:
-                job.status = CANCELLED
                 job.error = "cancelled before start"
                 job.finished_at = time.time()
+                job.status = CANCELLED
                 self._persist(job)
             elif was == RUNNING:
                 job.cancel_requested = True
@@ -323,23 +323,24 @@ class JobRunner:
                 # No sink → still execute the plan (the reference never
                 # returns results inline; completion IS the result).
                 job.result_rows = df.count()
+            # status is the publish flag a concurrent reader polls on, so
+            # every field it implies (error, finished_at) must land first
+            job.finished_at = time.time()
             job.status = COMPLETED
         except Exception as exc:
             if job.cancel_requested and _is_cancellation(exc):
                 job.error = "cancelled while running"
+                job.finished_at = time.time()
                 job.status = CANCELLED
             else:
                 # A genuine failure stays FAILED with its traceback even if
                 # a cancel happened to be requested around the same moment —
                 # only the cancellation interrupt itself maps to CANCELLED.
-                # error before status: status is the publish flag a
-                # concurrent reader polls on, so every field it implies
-                # must land first
                 job.error = traceback.format_exc(limit=10)
+                job.finished_at = time.time()
                 job.status = FAILED
         finally:
             self.spark.sparkContext.setJobGroup("", "")
-            job.finished_at = time.time()
             self.queue._persist(job)
 
 

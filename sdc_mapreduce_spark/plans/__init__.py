@@ -28,26 +28,6 @@ def formatted_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
-def has_operator(df: DataFrame, name: str) -> bool:
-    return name in executed_plan(df)
-
-
-def count_shuffles(df: DataFrame) -> int:
-    """Number of Exchange operators in the plan (each is a full shuffle)."""
-    return executed_plan(df).count("Exchange hashpartitioning") + executed_plan(
-        df
-    ).count("Exchange rangepartitioning")
-
-
-def scan_summary(df: DataFrame) -> list[str]:
-    """The FileScan lines — where PushedFilters and ReadSchema live."""
-    return [
-        line.strip()
-        for line in executed_plan(df).splitlines()
-        if "FileScan" in line
-    ]
-
-
 def explain_all(spark, sf_dir: str) -> dict[str, str]:
     """Formatted plan for every registered query (skips queries whose plan
     needs runtime artifacts, e.g. fitted models, if they fail to build)."""

@@ -48,513 +48,40 @@ for _name in _MODULE_ORDER:
         raise RuntimeError(f"duplicate query names: {overlap}")
     _ALL.update(mod.QUERIES)
 
-# Registration order is the driver's check order, and the driver's
-# correctness window is bounded (each round records exactly the first 50
-# entries). The window therefore ROTATES per round so every query earns a
-# driver-green row over time:
-#   round 1 window: flagship + LLM-pipeline + TPC-H head + surface head
-#   rounds 2-3 window: same set (registry was frozen — wasted rounds)
-#   round 4 window: the 24 queries never driver-sampled in r1-r3, 6 queries
-#     with oracles new in r4, then 20 of the 46 r1-only queries. Result:
-#     every then-registered query driver-sampled at least once.
-#   round 5 window: the 26 r1-only queries not refreshed in r4, the queries
-#     fixed/changed/added in r5, and 9 brand-new r5 queries. 49/49 green.
-#   round 6 window: the 41 round-5-continuation queries that had never had
-#     a driver row, then 9 re-certs. 50/50 green — after r6 every
-#     registered query has a driver row.
-#   round 7 window (this order): (1) the 20 queries ADDED in round 6
-#     (bucketed_join_certified .. text_score_distribution — never
-#     driver-sampled; several hardened this round: pit-enrichment
-#     tie-break, attribution (ts, event_id) window, decimal factor casts in
-#     gini/regression/MI, gated cluster-label broadcasts); (2)
-#     dedup_incremental_embedding_index, NEW in r7 (persisted
-#     bucket-partitioned SRP index); (3) three re-certs whose shared code
-#     changed in r7 (minhash_lsh_pairs probe-trim feeds dedup_minhash_lsh,
-#     graph_pagerank_neardup, dedup_containment_pairs); (4) the first 26 of
-#     the 39 r3-last-sampled queries (wordcount_pipe ..
-#     simsearch_ann_recall). All of (1)-(3) locally hash-verified at
-#     sf0.01 AND sf0.1 AND --tz Asia/Kolkata this round
-#     (tools/check_oracle.py artifacts committed under CHECKS_r07/).
-#   round 8 window (this order; r7's window was VOIDED by the import break,
-#     so it is re-fronted wholesale): (1) queries NEW or CHANGED in r8 —
-#     embedding_label_silhouette (r7 WIP finished: registered + tested),
-#     simsearch_ann_ivf (switched to the deterministic seeded-centroid
-#     quantizer and given a full DuckDB oracle; the only ever-sampled
-#     never-green query), table_benford_audit (digit-domain fix),
-#     dedup_incremental_embedding_index (per-run unique index dir),
-#     dedup_minhash_lsh (bucket_counts unpersist); (2) the four queries
-#     added in r7 after its window froze (events_streaming_session_certified,
-#     dedup_source_leakage_matrix, events_changepoint_cusum) plus
-#     text_vocab_encode (post-freeze persist re-cert); (3) the 20 round-6
-#     additions, still never driver-sampled; (4) the r7 re-certs
-#     (graph_pagerank_neardup, dedup_containment_pairs); (5) fill to 50
-#     from the r3-last-sampled block (wordcount_pipe ..
-#     multimodal_frame_stats).
-#   round 9 plan, in priority order (pre-sequenced so a truncated round
-#     still certifies the stalest first): (0) queries added in r8 after
-#     its window froze (text_bm25_topk, dedup_streaming_embedding_certified,
-#     graph_triangle_stats, events_streaming_watermark_certified,
-#     text_term_cooccurrence, events_streaming_update_certified,
-#     multimodal_neardup_banded, dedup_keep_best, sample_quota_allocation,
-#     text_zipf_audit, table_k_anonymity, agg_weighted_median,
-#     events_attribution_time_decay, events_streaming_restart_certified,
-#     multimodal_neardup_recall, events_autocorrelation,
-#     dedup_cluster_sizes — builder-oracle-green, never driver-sampled);
-#     (1) the 7 r3-last-sampled
-#     queries squeezed out of the r8 window (dedup_exact ..
-#     simsearch_ann_recall); (2) the 12 remaining r3-last-sampled
-#     (embedding_stats .. corpus_mix_rebalance); (3) any query whose code
-#     or oracle changes in round 9; (4) the r4-last-sampled block;
-#     (5) oldest-first thereafter.
-#   round 9 window (this order; realizes the r9 plan above): (0) the 17
-#     queries ADDED in r8 post-freeze (builder-oracle-green in CHECKS_r08,
-#     never driver-sampled); (1) queries NEW or CHANGED in r9 —
-#     multimodal_encoder_topk (NEW: real fixed-seed random-projection
-#     encoder replacing the digest stub, oracle carries the 256 literal
-#     weights), kvtext_streaming_restart_certified (NEW: exactly-once
-#     offset contract of the custom streaming source across a
-#     checkpointed restart), text_bpe_merges (NEW: distributed BPE merge
-#     learning, canonical Sennrich semantics, 4-stage CTE oracle),
-#     text_bpe_segment (NEW: BPE apply via the distinct-word
-#     memoization join), events_time_purged_split (NEW: purged
-#     walk-forward temporal split + leakage audit),
-#     dedup_cluster_safe_split (NEW: near-dup-safe train/test split by
-#     cluster representative; audit proves 0 straddling pairs vs the
-#     naive per-doc hash's >0),
-#     text_vocab_encode (fused gate-probe+rank+collect),
-#     text_vocab_ids (vocab_counts refactor), dedup_minhash_lsh (lazy
-#     hot-bucket cap) and its cluster/pagerank consumers; (2) the 8
-#     r3-last-sampled queries squeezed out of the r8 window; (3) the 12
-#     remaining r3-last-sampled; (4) the head of the r4-last-sampled block.
-#     After the window: the old rotation order (stalest first), with the
-#     r8-sampled window entries (freshest) at the very end.
-#     Round 9 also CLOSED the 10x-replica sweep: the 26 queries not covered
-#     by CHECKS_r08/scale_sf1ish*.txt (embedding/simsearch block, late
-#     additions, both r9 queries) are hash-verified at the 10x corpus in
-#     CHECKS_r09/scale_sf1ish_remaining.txt — every query registered at
-#     that point had a ~SF1 hash-verified run (full_registry_sf0.01.txt is
-#     the corresponding one-sweep pass at that round's HEAD; the two
-#     post-sweep r9 split queries were each certified x4 configs incl.
-#     the 10x corpus).
-#   round 10 plan, in priority order (pre-sequenced so a truncated round
-#     still certifies the stalest first): (0) any query added in r9 after
-#     this window froze; (1) the three entries demoted from the r9 window
-#     to keep it at 50 (multimodal_resize_audit, events_range_join,
-#     latest_event_per_user — r4-last-sampled, stalest in the registry);
-#     (2) any query whose code or oracle changes in round 10; (3) the
-#     remainder of the r4-last-sampled block (events_dedup_windowed ..
-#     join_left_agg); (4) the r5-last-sampled block; oldest-first
-#     thereafter.
-#   round 10 window (this order; realizes the r10 plan above): (0) nothing
-#     was added in r9 post-freeze; (1) the five stalest rotation entries,
-#     including the three demoted from the r9 window (agg_salted_distinct,
-#     simsearch_ann_ivf_recall, multimodal_resize_audit, events_range_join,
-#     latest_event_per_user); (2) the 17 queries NEW or CHANGED in r10 —
-#     events_sessionize_auto (NEW: stats-driven plan selection),
-#     kvtext_streaming_restart_certified (source-level partition guard +
-#     default shard size + timeout check), text_bpe_merges_batched (NEW:
-#     batched disjoint-prefix merge learning, O(k/m) passes),
-#     text_bpe_merges/segment (shared _bpe_apply_merges refactor),
-#     events_time_purged_split (safe cutoff literal),
-#     dedup_cluster_safe_split (single LSH pass),
-#     multimodal_encoder_topk/embed_search (+_neardup family) and the
-#     pin()-refactored persist sites (dedup_exact_substring,
-#     dedup_source_leakage_matrix, text_vocab_encode, pipeline_* family);
-#     (3) the remainder of the r4-last-sampled block (events_dedup_windowed
-#     .. q19_disjunctive_filters; q22 spills to the rotation head).
-#   round 11 plan, in priority order (pre-sequenced so a truncated round
-#     still certifies the stalest first): (0) any query added in r10 after
-#     this window froze — so far text_bpe_segment_batched (NEW: batched
-#     learner state through the shared memoization-join apply body;
-#     builder-oracle-green at sf0.001/sf0.01, plus sf0.1/Kolkata/10x in
-#     CHECKS_r10/text_bpe_segment_batched_x3.txt); (1) any query whose
-#     code or oracle changes in
-#     round 11; (2) the tail of the r4-last-sampled block squeezed out of
-#     this window (agg_pivot .. join_left_agg); (3) the r5-last-sampled
-#     block (join_semi ..); oldest-first thereafter.
-#   round 11 window (this order; realizes the r11 plan above): (0) the
-#     five queries NEW in r11 — dedup_jaccard_prefix (AllPairs/PPJoin
-#     prefix-filtered exact Jaccard, shares the exhaustive oracle),
-#     table_psi_drift (PSI drift audit, micro-nat quantized),
-#     simsearch_mmr (MMR diversified top-k; integer greedy over
-#     micro-quantized cosines, k-step unrolled CTE oracle),
-#     dedup_sorted_neighborhood (SNM blocking over the two-phase global
-#     rank), text_heavy_hitters (two-pass Misra-Gries) — plus the
-#     post-freeze r10 addition text_bpe_segment_batched; (1) the queries
-#     whose code or oracle changed in r11 — text_bpe_merges_batched (+
-#     segment twin) after the skip-and-continue batch selection rewrote
-#     both learners' oracle SQL, events_sessionize_auto after the
-#     key-stats cache, kvtext_streaming_restart_certified +
-#     kvtext_scan_certified after the byte-balanced coalesce_shards; (2)
-#     the r4-last-sampled tail squeezed out of the r10 window (q22,
-#     agg_pivot .. join_left_agg); (3) the r5-last-sampled block
-#     (join_semi ..) and onward oldest-first through kv_sink_certified.
-#   round 12 plan, in priority order (pre-sequenced so a truncated round
-#     still certifies the stalest first): (0) any query added or changed
-#     in round 12; (1) the rotation head (events_sessionize_salted ..),
-#     oldest-first; (2) the r10-window block (freshest, rotation tail).
-# round 14 plan, in priority order (VERDICT r13 ask #2 — the r13 window
-#   violated its own slot-(0) rule: zero r13-changed queries sat in the
-#   head, so the driver's official oracle never saw 5 of the 6 rewritten
-#   queries; this head is rebuilt around exactly that rule): (0) every
-#   query whose OPERATOR changed in r14 — the SRP verify/prep family
-#   (e48c507: raw-f32 group rows, up-probes, SGEMM prefilter + fold-band,
-#   pinned unit-norm prep) feeding dedup_embedding_ann/_clusters/_cosine,
-#   the incremental/streaming embedding paths and both simsearch_ann_*
-#   consumers; the minhash_lsh_pairs grouped candidate generation
-#   (408d888) feeding dedup_minhash_lsh, the near_dup_clusters family,
-#   dedup_source_leakage_matrix and dedup_cluster_safe_split; and the
-#   jaccard_prefix positional-filter rewrite (this round); (1) the queries
-#   rewritten in r13 that the r13 window missed (VERDICT r13 flaw #1):
-#   dedup_exact_substring, dedup_sorted_neighborhood,
-#   multimodal_encoder_topk (dedup_jaccard_prefix and dedup_embedding_ann
-#   already lead in slot 0); (2) the stalest rotation entries — everything
-#   the r13 window did NOT officially certify, in rotation order; (3) the
-#   r13-certified block (freshest certs) last.
-_WINDOW_R14: tuple[str, ...] = (
-    # (0a) r14: SRP bucket-verify/prep kernel consumers (e48c507)
+# Registration order is the driver's check order, and the driver certifies
+# only the first 50 entries. CERT_HEAD leads with every query whose
+# operator code changed most recently, so the driver's window always covers
+# fresh code; the rest follow in _MODULE_ORDER registration order. Replace
+# the head whenever an operator changes (history: git log of this file).
+CERT_HEAD: tuple[str, ...] = (
+    # embedding_near_pairs_blocked (one in-bucket verify path)
     "dedup_embedding_ann",
     "dedup_embedding_clusters",
-    "dedup_embedding_cosine",
-    "dedup_incremental_embedding",
-    "dedup_incremental_embedding_index",
-    "dedup_streaming_embedding_certified",
-    "simsearch_ann_srp",
-    "simsearch_ann_recall",
-    # (0b) r14: minhash_lsh_pairs one-pass grouped candidates (408d888)
+    # MinHash banding (_minhash_minima) and minhash_lsh_pairs consumers
     "dedup_minhash_lsh",
-    "dedup_clusters",
-    "dedup_cluster_labels",
-    "dedup_cluster_sizes",
-    "dedup_cluster_safe_split",
-    "dedup_keep_best",
-    "dedup_source_leakage_matrix",
-    # (0c) r14: jaccard_prefix verify-path work this round
-    "dedup_jaccard_prefix",
-    # (1) r13 rewrites the r13 window never sampled (VERDICT r13 #1)
-    "dedup_exact_substring",
-    "dedup_sorted_neighborhood",
-    "multimodal_encoder_topk",
-)
-# round 13 plan, in priority order (pre-sequenced so a truncated round
-#   still certifies the stalest-and-least-certified first): (0) any query
-#   added or changed in round 13; (1) the r12-changed connected-components
-#   family (ADVICE r12 medium: min_label_propagation gained pointer
-#   jumping + a pair-source checkpoint and its DuckDB oracle was rewritten
-#   from a transitive-closure CTE to unrolled min-label rounds in r12, but
-#   every consumer sat outside the 50-entry certification head — only the
-#   judge's ad-hoc re-run covered them; certify them officially now); (2)
-#   the r11-window tail squeezed out of the r12 head (stalest official
-#   certs: last sampled r11); (3) the old-rotation block (_ROTATED_OUT,
-#   stalest-first); (4) the r12-certified head block (freshest, last).
-_WINDOW_R13: tuple[str, ...] = (
-    # (0) added or changed in round 13 — certify the freshest code first
-    # (1) the r12-changed CC family, officially uncertified at r12 HEAD
-    "dedup_embedding_clusters",  # oracle rewritten r12 (_min_label_rounds_sql)
-    "dedup_clusters",  # pointer-jumping Spark path r12
-    "dedup_cluster_labels",
-    "dedup_cluster_sizes",
-    "dedup_cluster_safe_split",
-    "dedup_keep_best",
-    "dedup_source_leakage_matrix",
-    "graph_pagerank_neardup",
-    "graph_triangle_stats",
-    # (2) the r11-window tail squeezed out of the r12 50-entry head
-    "corpus_shuffle_shards",
-    "embedding_quantize_audit",
-    "dedup_incremental",
-    "q11_important_stock",
-    "q20_potential_promotion",
-    "events_resample_gapfill",
-    "events_streaming_tumbling_certified",
-    "kv_sink_certified",
-)
-_WINDOW_R12: tuple[str, ...] = (
-    # (0) added or changed in round 12 — certify the freshest code first
-    "simsearch_mmr_indexed",  # NEW r12: MMR pool from persisted IVF index + recall audit
-    "text_unigram_lm",  # NEW r12: unigram-LM (SentencePiece-objective) tokenizer learner
-    "table_psi_drift",  # changed r12: Laplace +1 smoothing (ADVICE r11)
-    "simsearch_mmr",  # changed r12: oracle fold-dot parity + degenerate pools
-    "kvtext_streaming_restart_certified",  # changed r12: bounded multi-batch drain
-)
-_WINDOW_R11: tuple[str, ...] = (
-    "dedup_jaccard_prefix",  # new in r11: AllPairs/PPJoin prefix-filtered Jaccard
-    "events_streaming_sliding_certified",  # new in r11: sliding-window cert
-    "dedup_sorted_neighborhood",  # new in r11: SNM blocking, two-phase global rank
-    "text_heavy_hitters",  # new in r11: verified two-pass Misra-Gries top-k
-    "text_bpe_segment_batched",
-    "text_bpe_merges_batched",
-    "events_sessionize_auto",
-    "kvtext_scan_certified",
-    "q22_global_sales_opportunity",
-    "agg_pivot",
-    "agg_percentiles",
-    "udaf_geomean_pandas",
-    "grouped_zscore_pandas",
-    "subquery_above_nation_avg",
-    "sql_surface_correlated",
-    "join_inner",
-    "join_left_agg",
-    "join_semi",
-    "join_anti",
-    "join_broadcast_dim",
-    "agg_distinct",
-    "agg_rollup",
-    "agg_cube",
-    "agg_grouping_sets",
-    "window_rank_topn",
-    "window_running_sum",
-    "window_lag_delta",
-    "window_range_frame",
-    "sort_limit_topk",
-    "set_intersect",
-    "set_except",
-    "set_union",
-    "scalar_string_fns",
-    "scalar_datetime_fns",
-    "scalar_math_case",
-    "scalar_array_fns",
-    "scalar_null_fns",
-    "filter_project_pushdown",
-    "events_tumbling",
-    "events_sliding",
-    "events_json_extract",
-    "events_map_fns",
-    "agg_collect_sets",
-    "agg_approx_sketches",
-    "simsearch_ann_ivf_index_recall",
-    "corpus_shuffle_shards",
-    "embedding_quantize_audit",
-    "dedup_incremental",
-    "q11_important_stock",
-    "q20_potential_promotion",
-    "events_resample_gapfill",
-    "events_streaming_tumbling_certified",
-    "kv_sink_certified",
-)
-_ROTATED_OUT: tuple[str, ...] = (
-    # old-rotation remainder in its existing (stalest-first) order, then
-    # the r10-window block: sampled last round, so freshest, so last.
-    "events_sessionize_salted",
-    "multimodal_decode_profile",
-    "dedup_simhash",
-    "text_boilerplate_strip",
-    "text_quality_classifier",
-    "dedup_bloom_prefilter",
-    "simsearch_pq_codes",
-    "simsearch_ann_pq_recall",
-    "simsearch_ann_ivfpq_recall",
-    "layout_zorder_keys",
-    "text_countmin_freq",
     "dedup_incremental_minhash",
-    "csv_malformed_audit",
-    "orc_partitioned_certified",
-    "parquet_schema_evolution_certified",
-    "events_change_intervals",
-    "events_interval_overlap",
-    "events_cogroup_asof_pandas",
-    "events_streaming_dedup_certified",
-    "events_streaming_stateful_certified",
-    "events_streaming_join_certified",
-    "events_anomaly_robust",
-    "events_sessionize_native",
-    "events_transition_matrix",
-    "events_forward_fill",
-    "events_variant_json",
-    "events_rfm_features",
-    "events_asof_join_forward",
-    "text_bigram_lm_score",
-    "text_language_confusion",
-    "text_tfidf_cosine_pairs",
-    "text_duplicate_spans",
-    "embedding_nearest_centroid",
-    "simsearch_range_search",
-    "embedding_power_iteration",
-    "embedding_kmeans_step",
-    "embedding_label_centroids",
-    "table_histogram_equidepth",
-    "sample_weighted_topk",
-    "scalar_url_fns",
-    "agg_sketch_reaggregate",
-    "agg_bitwise_fns",
-    "agg_mode_deterministic",
-    "join_lateral_topk",
-    "corpus_mix_temperature",
-    "table_integrity_audit",
-    "corpus_pack_sequences",
-    "window_rank_topn_salted",
-    "dedup_jaccard_pairs",
-    "events_sessionize",
-    "simsearch_ann_srp",
-    "wordcount",
-    "kv_parse_sum",
-    "embedding_label_silhouette",
-    "simsearch_ann_ivf",
-    "table_benford_audit",
-    "dedup_incremental_embedding_index",
-    "events_streaming_session_certified",
-    "events_changepoint_cusum",
-    "bucketed_join_certified",
-    "compact_parquet_certified",
-    "dedup_embedding_ann",
-    "dedup_incremental_embedding",
-    "dedup_embedding_clusters",
-    "corpus_source_cap",
-    "events_cdc_apply",
-    "join_fuzzy_names",
-    "events_scd2_history",
-    "events_pit_enrichment",
-    "events_winsorize_clip",
-    "events_grouped_regression",
-    "table_chisq_independence",
-    "table_ks_drift",
-    "table_mutual_information",
-    "events_attribution_last_touch",
-    "table_gini_concentration",
-    "events_streaming_cdc_certified",
-    "text_score_distribution",
-    "dedup_containment_pairs",
-    "wordcount_pipe",
-    "text_token_stats",
-    "text_quality",
-    "text_language_id",
-    "text_fingerprint",
-    "text_rolling_fingerprint",
-    "text_top_bigrams",
-    "text_udtf_sentences",
-    "text_posexplode",
-    "text_tfidf_top_terms",
-    "text_repetition",
-    "text_pii_redact",
-    "text_contamination",
-    "text_chunking",
-    "text_quality_gate_per_lang",
-    "pipeline_embedding_stats",
-    "q1_pricing_summary",
-    "events_asof_join",
-    "text_bm25_topk",
-    "dedup_streaming_embedding_certified",
-    "graph_triangle_stats",
-    "events_streaming_watermark_certified",
-    "text_term_cooccurrence",
-    "events_streaming_update_certified",
-    "dedup_keep_best",
-    "sample_quota_allocation",
-    "text_zipf_audit",
-    "table_k_anonymity",
-    "agg_weighted_median",
-    "events_attribution_time_decay",
-    "events_streaming_restart_certified",
-    "events_autocorrelation",
-    "dedup_cluster_sizes",
-    "text_vocab_ids",
-    "dedup_minhash_lsh",
     "dedup_clusters",
     "dedup_cluster_labels",
-    "graph_pagerank_neardup",
-    "multimodal_meta",
-    "multimodal_frame_stats",
-    "dedup_exact",
-    "dedup_normalized",
-    "dedup_embedding_cosine",
-    "simsearch_topk",
-    "simsearch_topk_arrow",
-    "simsearch_ann_recall",
-    "embedding_stats",
-    "q2_min_balance_supplier",
-    "q8_market_share",
-    "q9_profit_by_nation_year",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q16_supplier_count",
-    "split_assignment",
-    "corpus_shard_packing",
-    "sample_hash_bucket",
-    "sample_stratified",
-    "corpus_mix_rebalance",
-    "join_skew_salted",
-    "agg_salted_distinct",
-    "simsearch_ann_ivf_recall",
-    "multimodal_resize_audit",
-    "events_range_join",
-    "latest_event_per_user",
-    "text_bpe_merges",
-    "text_bpe_segment",
-    "events_time_purged_split",
+    "dedup_cluster_sizes",
     "dedup_cluster_safe_split",
-    "multimodal_encoder_topk",
-    "multimodal_embed_search",
-    "multimodal_neardup_banded",
-    "multimodal_neardup_recall",
-    "dedup_exact_substring",
+    "dedup_keep_best",
     "dedup_source_leakage_matrix",
-    "text_vocab_encode",
-    "pipeline_pretrain_mix",
-    "pipeline_curation",
-    "pipeline_curation_full",
-    "events_dedup_windowed",
-    "q3_shipping_priority",
-    "q12_late_shipments",
-    "q17_small_quantity_revenue",
-    "q21_waiting_suppliers",
-    "join_cross",
-    "join_full_outer_coalesce",
-    "join_null_safe",
-    "agg_minmax_by",
-    "agg_stats_moments",
-    "agg_unpivot",
-    "window_distribution_fns",
-    "set_except_all",
-    "set_intersect_all",
-    "scalar_regex_fns",
-    "table_profile",
-    "events_cohort_retention",
-    "events_from_json_struct",
-    "events_funnel",
-    "events_monthly_rollup",
-    "q4_order_priority",
-    "q5_local_supplier",
-    "q6_forecast_revenue",
-    "q7_nation_volume",
-    "q10_returned_items",
-    "q14_promo_share",
-    "q18_large_volume",
-    "q19_disjunctive_filters",
+    # jaccard_prefix_pairs
+    "dedup_jaccard_prefix",
+    # simsearch._nano_centroids consumers
+    "embedding_label_centroids",
+    "embedding_label_silhouette",
+    "embedding_nearest_centroid",
+    "embedding_kmeans_step",
 )
-# Assembly order realizes the r13 plan: r13 head, then the stalest
-# old-rotation block, then the r12-certified blocks (freshest) last.
-# Names the r13 head PROMOTES out of the later tuples (the CC family
-# lives in _ROTATED_OUT; the r11 tail in _WINDOW_R11) are deduped here
-# order-preserving — first occurrence wins — so the older tuples stay
-# intact as historical record while _PRIORITY stays duplicate-free
-# (tests/test_registry.py::test_every_registered_query_is_prioritized).
-_seen: set = set()
-_R13_PRIORITY: tuple[str, ...] = tuple(
-    n
-    for n in (*_WINDOW_R13, *_ROTATED_OUT, *_WINDOW_R12, *_WINDOW_R11)
-    if not (n in _seen or _seen.add(n))
-)
-del _seen
-# r14 assembly: the r14 head (operator-changed queries) first, then the
-# entries the r13 driver window did NOT certify (= r13 priority past the
-# 50-entry sample), stalest-first in their existing rotation order, then
-# the r13-certified block (freshest official certs) last.
-_R13_CERT_HEAD: tuple[str, ...] = _R13_PRIORITY[:50]
-_seen = set()
-_PRIORITY: tuple[str, ...] = tuple(
-    n
-    for n in (*_WINDOW_R14, *_R13_PRIORITY[50:], *_R13_CERT_HEAD)
-    if not (n in _seen or _seen.add(n))
-)
-del _seen
 if not IMPORT_QUARANTINE:
-    # Only enforce plan completeness on a healthy import — with a module
-    # quarantined, its plan entries are expected to be missing and the
-    # registry must still construct for the driver.
-    assert set(_PRIORITY) <= _ALL.keys(), set(_PRIORITY) - _ALL.keys()
+    # Only enforce on a healthy import — with a module quarantined, its
+    # head entries are expected to be missing and the registry must still
+    # construct for the driver.
+    assert set(CERT_HEAD) <= _ALL.keys(), set(CERT_HEAD) - _ALL.keys()
 
 REGISTRY: dict[str, QuerySpec] = {
-    name: _ALL[name] for name in _PRIORITY if name in _ALL
+    name: _ALL[name] for name in CERT_HEAD if name in _ALL
 }
 REGISTRY.update({name: spec for name, spec in _ALL.items() if name not in REGISTRY})
 

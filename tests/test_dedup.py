@@ -52,16 +52,16 @@ def test_minhash_estimate_tracks_exact_jaccard(spark, sf_dir):
         for r in D.jaccard_pairs(docs, n=3, threshold=0.8).collect()
     }
     assert exact
+    import numpy as np
+
     K = 128
-    sets = D.shingle_sets(docs, n=3)
+    a_co, b_co = D._minhash_coefficients(np.random.RandomState(D.RNG_SEED_MINHASH), K)
     sigs = {
-        r["doc_id"]: [r[f"mh_{i}"] for i in range(K)]
-        for r in D._signatures_from_sets_arrow(sets, num_hashes=K)
-        .drop("shingles")
-        .collect()
+        r["doc_id"]: D._minhash_minima(r["shingles"], a_co, b_co)
+        for r in D.shingle_sets(docs, n=3).collect()
     }
     for (a, b), j in exact.items():
-        est = sum(x == y for x, y in zip(sigs[a], sigs[b])) / K
+        est = float(np.mean(sigs[a] == sigs[b]))
         assert abs(est - j) <= 0.15, (a, b, j, est)
 
 

@@ -197,3 +197,29 @@ def test_job_conf_isolated_per_job_session(spark):
     assert seen["in_job"] == "12345678"
     assert seen["shared_during"] == before
     assert spark.conf.get(key) == before
+
+
+def test_terminal_status_lands_after_finished_at(spark):
+    """status is the publish flag a GET /jobs/<id> poller reads: when a job
+    turns COMPLETED, FAILED or CANCELLED, finished_at must already be set."""
+    seen: list[tuple[str, float | None]] = []
+
+    class SpyJob(J.Job):
+        def __setattr__(self, name, value):
+            if name == "status" and value in (J.COMPLETED, J.FAILED, J.CANCELLED):
+                seen.append((value, self.finished_at))
+            super().__setattr__(name, value)
+
+    def failing(s):
+        raise ValueError("plan bug")
+
+    def cancelled_before_action(s):
+        job.cancel_requested = True
+        return s.range(1)
+
+    runner = J.JobRunner(spark, J.JobQueue())
+    for jid, plan in enumerate((lambda s: s.range(3), failing, cancelled_before_action)):
+        job = SpyJob(job_id=jid, plan=plan)
+        runner._run(job)
+    assert [status for status, _ in seen] == [J.COMPLETED, J.FAILED, J.CANCELLED]
+    assert all(finished is not None for _, finished in seen), seen

@@ -45,10 +45,12 @@ def test_global_topk_is_take_ordered(spark, sf_dir):
 
 
 def test_minhash_signatures_are_shuffle_free(spark, sf_dir):
-    from sdc_mapreduce_spark.functions.dedup import minhash_signatures
+    """The MinHash minima and band hashes are computed map-side: shingle
+    arrays to band rows never shuffle."""
+    from sdc_mapreduce_spark.functions.dedup import _band_rows_arrow, shingle_sets
 
     docs = load_table(spark, sf_dir, "documents")
-    plan = _plan(minhash_signatures(docs, num_hashes=16))
+    plan = _plan(_band_rows_arrow(shingle_sets(docs), num_hashes=16, bands=4))
     assert "Exchange" not in plan, f"signature stage shuffles:\n{plan}"
 
 
@@ -333,22 +335,27 @@ def test_interval_overlap_never_nested_loop(spark, sf_dir):
 
 
 def test_blocked_pairs_bucket_join_is_narrow(spark, sf_dir):
-    """The SRP bucket self-join must carry ONLY (id, bucket): the 64-double
-    unit arrays riding the exploded shuffle was the measured bottleneck of
-    the naive formulation (r6). The verify joins re-attach units AFTER the
-    candidate set exists, with the candidate side broadcast."""
+    """The SRP near-pair verify runs inside each bucket group: the only
+    shuffle carries narrow per-vector group rows, keyed by (bucket, salt).
+    No hash Exchange carries candidate (id_a, id_b) rows, and the 64-double
+    unit vectors (``__unit``) never enter an Exchange."""
     from sdc_mapreduce_spark.functions.simsearch import embedding_near_pairs_blocked
+    from sdc_mapreduce_spark.plans import formatted_plan
 
     emb = load_table(spark, sf_dir, "embeddings")
-    plan = _plan(embedding_near_pairs_blocked(emb, n_planes=6))
-    # every hash-partitioned exchange in this plan must be unit-free: the
-    # only shuffle is the narrow band join (units travel only through
-    # broadcast/persisted scans; candidate pairs are unique by probe-set
-    # construction, so there is no distinct stage)
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "__unit" not in line and "__ua" not in line and "__ub" not in line, line
-    assert "BroadcastHashJoin" in plan  # candidate ids broadcast into verify
+    plan = formatted_plan(embedding_near_pairs_blocked(emb, n_planes=6))
+    # formatted sections read "(n) Exchange / Input [k]: [cols] /
+    # Arguments: <partitioning>"
+    sections = plan.split("\n\n(")[1:]
+    exchanges = [sec for sec in sections if sec.split("\n", 1)[0].endswith("Exchange")]
+    hashed = [sec for sec in exchanges if "hashpartitioning" in sec]
+    assert hashed, plan
+    for sec in exchanges:
+        assert "__unit" not in sec, sec
+    for sec in hashed:
+        assert "id_a" not in sec and "id_b" not in sec, sec
+        assert "__g" in sec and "__salt" in sec, sec
+    assert "FlatMapGroupsInPandas" in plan
 
 
 def test_incremental_embedding_batch_side_broadcast(spark, sf_dir):

