@@ -48,11 +48,12 @@ for _name in _MODULE_ORDER:
         raise RuntimeError(f"duplicate query names: {overlap}")
     _ALL.update(mod.QUERIES)
 
-# Registration order is the driver's check order, and the driver certifies
-# only the first 50 entries. CERT_HEAD leads with every query whose
-# operator code changed most recently, so the driver's window always covers
-# fresh code; the rest follow in _MODULE_ORDER registration order. Replace
-# the head whenever an operator changes (history: git log of this file).
+# Registration order is the order in which queries are certified against
+# their oracles, and certification covers only the first 50 entries.
+# CERT_HEAD leads with every query whose operator code changed most
+# recently, so the certified window always covers fresh code; the rest
+# follow in _MODULE_ORDER registration order. Replace the head whenever an
+# operator changes (history: git log of this file).
 CERT_HEAD: tuple[str, ...] = (
     # embedding_near_pairs_blocked (one in-bucket verify path)
     "dedup_embedding_ann",
@@ -77,7 +78,7 @@ CERT_HEAD: tuple[str, ...] = (
 if not IMPORT_QUARANTINE:
     # Only enforce on a healthy import — with a module quarantined, its
     # head entries are expected to be missing and the registry must still
-    # construct for the driver.
+    # construct.
     assert set(CERT_HEAD) <= _ALL.keys(), set(CERT_HEAD) - _ALL.keys()
 
 REGISTRY: dict[str, QuerySpec] = {

@@ -51,8 +51,8 @@ def test_every_registered_query_is_prioritized():
 
 
 def test_cert_head_leads_the_registry():
-    """The driver certifies the first 50 registry entries: CERT_HEAD must
-    lead the registry, in order, and fit inside that window."""
+    """Oracle certification covers the first 50 registry entries: CERT_HEAD
+    must lead the registry, in order, and fit inside that window."""
     import sdc_mapreduce_spark.queries as q
 
     assert len(q.CERT_HEAD) <= 50

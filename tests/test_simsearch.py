@@ -355,13 +355,10 @@ def test_incremental_embedding_dedup_flags_planted_near_dup(spark, sf_dir):
     assert ortho_id not in out  # nothing in the corpus at cosine >= 0.95
 
 
-def test_blocked_pairs_equal_exact_pairs_within_probe_radius(spark, sf_dir):
-    """The in-bucket verify must return EXACTLY the exact-cosine pairs
-    (``embedding_near_pairs``) whose SRP buckets differ in at most
-    ``multi_probe_bits`` bits — same pairs, including any
-    threshold-boundary ones — with and without multi-probe, and with a
-    chunk size small enough to force the visitor-blocking loop."""
-    emb = load_table(spark, sf_dir, "embeddings")
+def _exact_pairs_within_probe_radius(emb):
+    """``embedding_near_pairs`` (the JVM self-join with the left-fold
+    ``dot``) as a function of the probe radius: the pairs whose SRP buckets
+    under ``n_planes=6`` differ in at most ``bits`` bits."""
     v = S._as_double(F.col("embedding"))
     unit = F.transform(v, lambda x: x / S.l2_norm(v))
     bucket = {
@@ -380,6 +377,17 @@ def test_blocked_pairs_equal_exact_pairs_within_probe_radius(spark, sf_dir):
             (a, b) for a, b in exact if bin(bucket[a] ^ bucket[b]).count("1") <= bits
         )
 
+    return within
+
+
+def test_blocked_pairs_arrow_verify_bitwise_equals_jvm(spark, sf_dir):
+    """The in-bucket verify (an Arrow kernel inside each SRP bucket group)
+    must return EXACTLY the JVM exact-cosine pairs (``embedding_near_pairs``)
+    whose buckets differ in at most ``multi_probe_bits`` bits — same pairs,
+    including any threshold-boundary ones — with and without multi-probe:
+    its float64 re-score is the same IEEE add sequence per pair."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    within = _exact_pairs_within_probe_radius(emb)
     for mpb in (0, 1):
         got = sorted(
             map(
@@ -390,6 +398,14 @@ def test_blocked_pairs_equal_exact_pairs_within_probe_radius(spark, sf_dir):
             )
         )
         assert got == within(mpb) and len(got) > 0, f"multi_probe_bits={mpb}"
+
+
+def test_blocked_pairs_bucket_verify_bitwise_equals_jvm(spark, sf_dir):
+    """The per-bucket verify must stay bitwise-identical to the JVM exact
+    pairs within the probe radius when a chunk size small enough to force
+    the visitor-blocking loop splits each bucket's scoring into blocks."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    within = _exact_pairs_within_probe_radius(emb)
     chunked = sorted(
         map(
             tuple,
